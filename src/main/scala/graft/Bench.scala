@@ -50,74 +50,56 @@ object Bench {
     // any timed query window and is priced under its OWN top-level
     // metric, so per-query times price serving. A failed pre-build means
     // the first consuming query silently rebuilds the artifact INSIDE
-    // its window — the `includesBuild` flag lands in the JSON so that
-    // is never presented as serving cost. (r15 ADVICE: one helper
-    // instead of six copies of the time/try/NaN/json boilerplate.)
-    def timedPrebuild(label: String)(f: => Unit)
-        : (Double, String, Boolean) = {
+    // its window — the includes-build flag lands in the JSON so that
+    // is never presented as serving cost. One row per artifact:
+    // (metric key, includes-build flag key, build), run in table order.
+    val prebuilds: Seq[(String, String, () => Unit)] = Seq(
+      // IVF index (maintenance job in production — Ann.buildIndex):
+      // ann_ivf_* times are probe-only
+      ("ann_index_build", "ann_probe_includes_build",
+        () => operators.Ann.buildIndex(spark, sfDir)),
+      // n-gram dedup pair table + cluster labels (persisted maintenance
+      // artifacts — DedupOps.ngramJaccardPairs scaladoc)
+      ("pair_table_build", "pair_serving_includes_build",
+        () => operators.DedupOps.ngramClusterLabels(spark, sfDir).count()),
+      // PQ codebooks + encoded corpus (Pq.buildCodes scaladoc): sim_pq_*
+      // times are ADC-scan + re-rank only
+      ("pq_code_build", "pq_serving_includes_build",
+        () => operators.Pq.buildCodes(spark, sfDir).count()),
+      // IVF-PQ cell-partitioned codes artifact (per-generation build)
+      ("ivfpq_code_build", "ivfpq_serving_includes_build",
+        () => operators.Pq.buildIvfPqCodes(spark, sfDir)),
+      // the ingest gate's appended fixture (index on the even half, codes
+      // committed there, odd half appended) — measured ~4.7 s at sf0.1
+      // absorbed by whichever gate ran first before the r12 split
+      ("ivfpq_ingest_fixture_build", "ivfpq_ingest_gate_includes_build",
+        () => operators.Pq.ivfPqAppendedFixture(spark, sfDir)),
+      // the plain-IVF append/delete gate fixtures (r15 split — each gate's
+      // first window used to absorb a half-/whole-corpus k-means build:
+      // 7.5 s of the append gate's 7.8 s first rep at sf0.1, and the two
+      // gates were the sf10 ledger's largest entries for that reason)
+      ("ivf_append_fixture_build", "ivf_append_gate_includes_build",
+        () => operators.Ann.appendedIndex(spark, sfDir)),
+      ("ivf_delete_fixture_build", "ivf_delete_gate_includes_build",
+        () => operators.Ann.deletedIndex(spark, sfDir)),
+      // the minhash gate's EXACT truth table (prefix-filter all-pairs over
+      // the gate's budget — the registry's most contention-sensitive
+      // shuffle; r15 split, exactness intact)
+      ("lsh_truth_build", "lsh_gate_includes_build",
+        () => operators.DedupOps.buildLshGateTruth(spark, sfDir)),
+      // q20's exact-distinct truth (the gate's compare target; r15 split)
+      ("q20_truth_build", "q20_gate_includes_build",
+        () => operators.Relational.buildQ20Truth(spark, sfDir)))
+    val prebuildJson = prebuilds.map { case (key, flag, build) =>
       val t0 = System.nanoTime()
-      val sec: Double =
-        try { f; (System.nanoTime() - t0) / 1e9 }
+      val sec =
+        try { build(); Some((System.nanoTime() - t0) / 1e9) }
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          Double.NaN
+          System.err.println(s"[bench] $key failed: ${e.getMessage}")
+          None
         }
-      (sec, if (sec.isNaN) "null" else sec.toString, sec.isNaN)
-    }
-    // IVF index (maintenance job in production — Ann.buildIndex):
-    // ann_ivf_* times are probe-only
-    val (_, annBuildJson, annProbeIncludesBuild) =
-      timedPrebuild("ann index build") {
-        operators.Ann.buildIndex(spark, sfDir); ()
-      }
-    // n-gram dedup pair table + cluster labels (persisted maintenance
-    // artifacts — DedupOps.ngramJaccardPairs scaladoc)
-    val (_, pairBuildJson, pairServingIncludesBuild) =
-      timedPrebuild("pair table build") {
-        operators.DedupOps.ngramClusterLabels(spark, sfDir).count(); ()
-      }
-    // PQ codebooks + encoded corpus (Pq.buildCodes scaladoc): sim_pq_*
-    // times are ADC-scan + re-rank only
-    val (_, pqBuildJson, pqServingIncludesBuild) =
-      timedPrebuild("pq code build") {
-        operators.Pq.buildCodes(spark, sfDir).count(); ()
-      }
-    // IVF-PQ cell-partitioned codes artifact (per-generation build)
-    val (_, ivfPqBuildJson, ivfPqServingIncludesBuild) =
-      timedPrebuild("ivfpq code build") {
-        operators.Pq.buildIvfPqCodes(spark, sfDir); ()
-      }
-    // the ingest gate's appended fixture (index on the even half, codes
-    // committed there, odd half appended) — measured ~4.7 s at sf0.1
-    // absorbed by whichever gate ran first before the r12 split
-    val (_, ingestFixBuildJson, ingestGateIncludesBuild) =
-      timedPrebuild("ivfpq ingest fixture build") {
-        operators.Pq.ivfPqAppendedFixture(spark, sfDir); ()
-      }
-    // the plain-IVF append/delete gate fixtures (r15 split — each gate's
-    // first window used to absorb a half-/whole-corpus k-means build:
-    // 7.5 s of the append gate's 7.8 s first rep at sf0.1, and the two
-    // gates were the sf10 ledger's largest entries for that reason)
-    val (_, appendFixBuildJson, appendGateIncludesBuild) =
-      timedPrebuild("ivf append fixture build") {
-        operators.Ann.appendedIndex(spark, sfDir); ()
-      }
-    val (_, deleteFixBuildJson, deleteGateIncludesBuild) =
-      timedPrebuild("ivf delete fixture build") {
-        operators.Ann.deletedIndex(spark, sfDir); ()
-      }
-    // the minhash gate's EXACT truth table (prefix-filter all-pairs over
-    // the gate's budget — the registry's most contention-sensitive
-    // shuffle; r15 split, exactness intact)
-    val (_, lshTruthBuildJson, lshGateIncludesBuild) =
-      timedPrebuild("lsh truth build") {
-        operators.DedupOps.buildLshGateTruth(spark, sfDir)
-      }
-    // q20's exact-distinct truth (the gate's compare target; r15 split)
-    val (_, q20TruthBuildJson, q20GateIncludesBuild) =
-      timedPrebuild("q20 truth build") {
-        operators.Relational.buildQ20Truth(spark, sfDir)
-      }
+      s""""$key":${sec.fold("null")(_.toString)},"$flag":${sec.isEmpty}"""
+    }.mkString(",")
     // ---- per-query session-state attribution (round 14): the sf10
     // q20/minhash gate outliers could only be ADJUDICATED, not explained,
     // from wall times alone — capture per-query task GC / spill via a
@@ -166,18 +148,9 @@ object Bench {
     }
     val queryMetrics =
       scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // fixed alphabetical order: deterministic run-to-run comparisons.
-    // SPARK_GRAFT_BENCH_REVERSE=1 runs the same set in reverse — the
-    // session-state probe (a query that is slow only late in the run is
-    // being hit by accumulated state, not by its own plan); ledger runs
-    // keep the default order.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val runOrder =
-      if (sys.env.get("SPARK_GRAFT_BENCH_REVERSE").contains("1"))
-        ordered.reverse
-      else ordered
+    // fixed alphabetical order: deterministic run-to-run comparisons
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    val results = runOrder.map { case (name, fn) =>
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val gc0 = driverGcMs(); val tg0 = taskGcMs.get()
       val ms0 = memSpill.get(); val ds0 = diskSpill.get()
       val st0 = stealTicks()
@@ -239,7 +212,7 @@ object Bench {
     val metricsJson = queryMetrics
       .map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val json = s"""{"metric":"serving_total","value":$servingTotal,"unit":"sec","gate_total":$gateTotal,"grand_total":${servingTotal + gateTotal},"gate_queries":$gateList,"queries":$qs,"query_metrics":$metricsJson,"ann_index_build":$annBuildJson,"ann_probe_includes_build":$annProbeIncludesBuild,"pair_table_build":$pairBuildJson,"pair_serving_includes_build":$pairServingIncludesBuild,"pq_code_build":$pqBuildJson,"pq_serving_includes_build":$pqServingIncludesBuild,"ivfpq_code_build":$ivfPqBuildJson,"ivfpq_serving_includes_build":$ivfPqServingIncludesBuild,"ivfpq_ingest_fixture_build":$ingestFixBuildJson,"ivfpq_ingest_gate_includes_build":$ingestGateIncludesBuild,"ivf_append_fixture_build":$appendFixBuildJson,"ivf_append_gate_includes_build":$appendGateIncludesBuild,"ivf_delete_fixture_build":$deleteFixBuildJson,"ivf_delete_gate_includes_build":$deleteGateIncludesBuild,"lsh_truth_build":$lshTruthBuildJson,"lsh_gate_includes_build":$lshGateIncludesBuild,"q20_truth_build":$q20TruthBuildJson,"q20_gate_includes_build":$q20GateIncludesBuild,"stray_jvms_at_start":${strays.size},"failed":$fails,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"serving_total","value":$servingTotal,"unit":"sec","gate_total":$gateTotal,"grand_total":${servingTotal + gateTotal},"gate_queries":$gateList,"queries":$qs,"query_metrics":$metricsJson,$prebuildJson,"stray_jvms_at_start":${strays.size},"failed":$fails,"sf":"$sfDir"}"""
     println(json)
     // the driver's captured tail truncates long stdout lines, so ALSO
     // persist the full per-query JSON under a stable path — round-over-

@@ -409,108 +409,12 @@ object VectorExprs {
         newChild: Expression): Expression = copy(child = newChild)
   }
 
-  /** Triangle-inequality-pruned twin of [[NearestCentroids]] — same
-    * output contract bit for bit (PrunedCentroidsSpec pins it), chosen
-    * by [[CentroidPruning.planFor]]'s build-time shape gate only when
-    * the centroid matrix has usable coarse structure (see that object's
-    * doc for the r15 rejection this design answers). The whole per-row
-    * algorithm lives in [[CentroidPruning.PrunedScan]]; codegen holds
-    * ONE scan instance as partition-lifetime mutable state and emits a
-    * single call per row, so there is no per-row scratch allocation and
-    * the generated method stays ~10 lines at any k.
-    *
-    * Null semantics match the plain kernel ON THE NON-RAGGED matrices
-    * the factory restricts this expression to: null array → null, null
-    * element → null, query length ≠ centroid length → null (with a
-    * uniform matrix, plain's per-centroid length check fires on the
-    * first centroid — one query-length check is the same predicate).
+  /** Column-API face of [[NearestCentroids]]: the top-m nearest
+    * centroid ids of `v`, ascending (distance, id).
     */
-  case class PrunedNearestCentroids(child: Expression,
-      cents: Array[Array[Double]], m: Int,
-      groups: CentroidPruning.Groups)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    require(cents.nonEmpty && m >= 1 && m <= cents.length)
-
-    // structural equality on the matrix, like NearestCentroids — the
-    // groups are a pure function of (cents, m), so they don't
-    // participate
-    override def equals(other: Any): Boolean = other match {
-      case that: PrunedNearestCentroids =>
-        m == that.m && child == that.child &&
-          java.util.Arrays.deepEquals(
-            cents.asInstanceOf[Array[AnyRef]],
-            that.cents.asInstanceOf[Array[AnyRef]])
-      case _ => false
-    }
-    override def hashCode(): Int =
-      (java.util.Arrays.deepHashCode(cents.asInstanceOf[Array[AnyRef]])
-        * 31 + child.hashCode()) * 31 + m
-
-    override def checkInputDataTypes()
-        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case other =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"nearest_centroids expects array<double>, got ${other.simpleString}")
-      }
-    override def dataType: DataType =
-      ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
-    override def nullable: Boolean = true
-    override def prettyName: String = "nearest_centroids_pruned"
-
-    override def nullSafeEval(input: Any): Any = {
-      // interpreted path: allocate the scan per call (expression
-      // instances are shared across threads here; this path is not hot)
-      val out = new CentroidPruning.PrunedScan(groups, cents, m)
-        .topM(input.asInstanceOf[ArrayData])
-      if (out == null) null
-      else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext,
-        ev: ExprCode): ExprCode = {
-      val scanCls = classOf[CentroidPruning.PrunedScan].getName
-      val groupsRef = ctx.addReferenceObj("prunedGroups", groups,
-        classOf[CentroidPruning.Groups].getName)
-      val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-      val scan = ctx.addMutableState(scanCls, "prunedScan",
-        v => s"$v = new $scanCls($groupsRef, $centsRef, $m);")
-      nullSafeCodeGen(ctx, ev, c => {
-        val out = ctx.freshName("out")
-        s"""
-        final int[] $out = $scan.topM($c);
-        if ($out == null) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = org.apache.spark.sql.catalyst.expressions
-            .UnsafeArrayData.fromPrimitiveArray($out);
-        }
-        """
-      })
-    }
-
-    override protected def withNewChildInternal(
-        newChild: Expression): Expression = copy(child = newChild)
-  }
-
-  /** Column-API face of the assignment kernel: the shape gate picks the
-    * pruned or plain form per centroid matrix ([[CentroidPruning]]); on
-    * matrices without usable structure — every bench-SF geometry — the
-    * expression is exactly the round-15 [[NearestCentroids]].
-    */
-  def nearestCentroids(v: Column, cents: Seq[Seq[Double]], m: Int): Column = {
-    val mat = cents.map(_.toArray).toArray
-    CentroidPruning.planFor(mat, m) match {
-      case Some(groups) =>
-        Bridge.column(PrunedNearestCentroids(Bridge.expression(v), mat, m,
-          groups))
-      case None =>
-        Bridge.column(NearestCentroids(Bridge.expression(v), mat, m))
-    }
-  }
+  def nearestCentroids(v: Column, cents: Seq[Seq[Double]], m: Int): Column =
+    Bridge.column(NearestCentroids(Bridge.expression(v),
+      cents.map(_.toArray).toArray, m))
 
   /** Column-API face of [[Int8Quantize]]. */
   def int8Quantize(v: Column): Column =

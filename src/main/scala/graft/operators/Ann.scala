@@ -402,7 +402,7 @@ object Ann {
     * vectors / vanished vec_ids after an in-JVM corpus rewrite — the
     * exact staleness class [[DedupOps.exactTwinModulus]]'s session memo
     * exists to prevent. A new session re-pays one index build ONLY for
-    * temp-dir (test/tool) indexes; with a pinned `graft.ann.indexDir`
+    * temp-dir (test/tool) indexes; with a pinned `spark.graft.ann.indexDir`
     * the dir carries a ready marker + persisted centroids, so later
     * sessions LOAD the completed index instead of overwriting it under
     * a concurrent reader (the geometry is encoded in the path — a
@@ -413,8 +413,7 @@ object Ann {
     */
   def ivfIndex(s: SparkSession, d: String): IvfIndex =
     SessionCache.memo(s, s"ivfIndex#$d#k=${cellCount(s, d)}", {
-      s.conf.getOption("spark.graft.ann.indexDir")
-        .orElse(s.conf.getOption("graft.ann.indexDir")) match {
+      s.conf.getOption("spark.graft.ann.indexDir") match {
         case Some(base) =>
           val dir = s"$base/ivf-" +
             s"${java.lang.Integer.toHexString(d.hashCode)}" +
@@ -512,8 +511,8 @@ object Ann {
             k, Iters)
         else kmeans(sampleFrame, k, Iters)
       // the index dir is a SHARED path on a real cluster (pin
-      // graft.ann.indexDir to a DFS path) — a driver-local temp dir only
-      // works on local[*] masters, where executors share the filesystem;
+      // spark.graft.ann.indexDir to a DFS path) — a driver-local temp dir
+      // only works on local[*] masters, where executors share the filesystem;
       // on a cluster, executor task outputs to a file:// temp path would
       // scatter across machines and the probe would read partial cells
       // cluster by cell BEFORE the partitioned write: without it every
@@ -973,12 +972,9 @@ object Ann {
   /** Corpus-size ceiling for writing probe blooms — the filter is a
     * driver/task-held object (n·14.4 bits: ~29 MB at 16M ids), so past
     * this the build/compact skips the sidecar and the probe keeps the
-    * cell-bounded exact read (the documented pre-r15 cost). Conf:
-    * `spark.graft.ann.probeBloomMaxItems`.
+    * cell-bounded exact read (the documented pre-r15 cost).
     */
-  private def bloomMaxItems(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.ann.probeBloomMaxItems").map(_.toLong)
-      .getOrElse(16000000L)
+  private val BloomMaxItems = 16000000L
 
   private def writeBloomFile(s: SparkSession, path: org.apache.hadoop.fs.Path,
       bf: org.apache.spark.util.sketch.BloomFilter): Unit = {
@@ -1001,7 +997,7 @@ object Ann {
   /** Write a source's vec_id bloom sidecar: distributed build
     * (`df.stat.bloomFilter` — one narrow pass over the id column),
     * driver-serialized to `path`. Skipped (and any stale sidecar
-    * removed) when `n` exceeds [[bloomMaxItems]] — a missing sidecar
+    * removed) when `n` exceeds [[BloomMaxItems]] — a missing sidecar
     * degrades the probe to exact, never to wrong.
     */
   /** Cap on the bloom aggregation's partial fan-in: `stat.bloomFilter`
@@ -1019,7 +1015,7 @@ object Ann {
 
   private def writeIdBloom(s: SparkSession, path: org.apache.hadoop.fs.Path,
       ids: DataFrame, n: Long): Unit = {
-    if (n > 0 && n <= bloomMaxItems(s))
+    if (n > 0 && n <= BloomMaxItems)
       writeBloomFile(s, path, ids.coalesce(BloomAggMaxPartitions)
         .stat.bloomFilter("vec_id", n, BloomFpp))
     else {
@@ -1354,7 +1350,7 @@ object Ann {
     * an in-place overwrite would delete files under a concurrent
     * reader's planned scan, exactly the race the pinned-dir build lock
     * exists to prevent. The caller swaps serving to the returned index
-    * (re-point `graft.ann.indexDir` / restart the serving session) and
+    * (re-point `spark.graft.ann.indexDir` / restart the serving session) and
     * then retires the old dir — the generation contract every external
     * vector index has. Cost is one index-sized shuffle, so schedule it
     * when appended-file count (not time) says so; [[graft.tools

@@ -7,10 +7,10 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 /** Row-BLOCKED nearest-centroids assignment for the ingest/build hot
   * path — the round-16 answer to the MEASURED shape of the assign wall.
   *
-  * What the measurements said (bench/assign_probe_r16_2m_{c,d,e}.json +
-  * the debugStats dump): at the 2M rehearsal decade the per-row
-  * assignment is MEMORY-BANDWIDTH-bound, not flop-bound — every row
-  * streams the whole k·dim centroid matrix (2.5 MB at k=5000) through
+  * What the measurements said (bench/assign_probe_r16_2m_{c,d,e}.json):
+  * at the 2M rehearsal decade the per-row assignment is
+  * MEMORY-BANDWIDTH-bound, not flop-bound — every row streams the
+  * whole k·dim centroid matrix (2.5 MB at k=5000) through
   * L3, so a pruned kernel that eliminated 94 % of the distance
   * evaluations moved the wall by ~1 % (3.17 → 3.14 s per 250 k rows),
   * and the corpus itself is a thin shell (m-th-best distance 1.125 vs
@@ -26,11 +26,10 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
   * blocking only reorders WHICH pairs are computed when, and the top-m
   * lex selection (distance, id) is evaluation-order-independent — so
   * the output is bit-identical (BlockedAssignSpec pins it, adversarial
-  * shapes included). The partial-distance early exit mirrors
-  * [[graft.functions.CentroidPruning.PrunedScan]]'s: a partial sum
-  * strictly above the row's CURRENT m-th best can never re-enter the
-  * final top-m (sums of non-negative terms are monotone; worst only
-  * decreases), in any evaluation order.
+  * shapes included). The partial-distance early exit is exact: a
+  * partial sum strictly above the row's CURRENT m-th best can never
+  * re-enter the final top-m (sums of non-negative terms are monotone;
+  * worst only decreases), in any evaluation order.
   *
   * Null semantics mirror the expression kernel on the non-ragged
   * matrices this path is restricted to: null vec / null element /
@@ -41,7 +40,8 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
   * [[MinCentroidsForBlocking]] centroids (the decade/production
   * geometry), so every bench-SF plan keeps the expression kernel
   * unchanged; the mapPartitions row detour costs ~0.2 s per 250 k rows
-  * (the probe's nokernel floor) against a measured multi-second win.
+  * (the r16 assign probe's nokernel floor) against a measured
+  * multi-second win.
   */
 object BlockedAssign {
 
@@ -62,16 +62,11 @@ object BlockedAssign {
     */
   val MinCentroidsForBlocking = 2048
 
-  /** Kill switch for A/B probes (`-Dgraft.blockedassign.disable=true`). */
-  private def disabled: Boolean =
-    java.lang.Boolean.getBoolean("graft.blockedassign.disable")
-
   private[graft] def eligible(cents: Seq[Seq[Double]]): Boolean =
-    !disabled && cents.length >= MinCentroidsForBlocking &&
-      cents.nonEmpty && {
-        val dim = cents.head.length
-        cents.forall(_.length == dim)
-      }
+    cents.length >= MinCentroidsForBlocking && {
+      val dim = cents.head.length
+      cents.forall(_.length == dim)
+    }
 
   /** Append an int-array `outCol` holding the top-m nearest centroid
     * ids (ascending (distance, id) — exactly

@@ -35,7 +35,9 @@ object Cdc {
         org.apache.spark.sql.types.StringType, nullable = true))
     // text + from_json (not spark.read.json): keeps the corrupt column a
     // plain materialized column (json() forbids queries touching only
-    // _corrupt_record), and is the same decode used on the stream path.
+    // _corrupt_record). The stream path decodes with readStream.json
+    // (CdcStream.jsonEventStream); both are PERMISSIVE, and [[unwrap]]
+    // drops what either decodes without an op.
     spark.read.text(path)
       .select(from_json(col("value"), withCorrupt, Map(
         "mode" -> "PERMISSIVE",
@@ -59,13 +61,24 @@ object Cdc {
     * keeps the last row image, cdc_pipeline_dag.py:145), plus metadata
     * columns op/table_name/lsn (add.fields=op,table,lsn,
     * cdc_pipeline_dag.py:146).
+    *
+    * An envelope without an `op` is dropped: a malformed line decodes
+    * PERMISSIVE to all-NULL fields, and kept it would become a NULL-key
+    * state row. The reference's errors.tolerance=all sink drops such
+    * records (cdc_pipeline_dag.py:203-205); batch decode still counts
+    * them in `_corrupt` ([[readJsonEvents]]). The drop explodes one
+    * copy of each kept row instead of filtering: Spark pushes a filter
+    * on a decoded field below the `from_json` projection, which then
+    * parses every line twice.
     */
   def unwrap(envelope: DataFrame): DataFrame = {
+    val kept = envelope.withColumn("__keep",
+      explode(when(col("op").isNotNull, array(lit(true))))).drop("__keep")
     val img = when(col("op") === "d", col("before")).otherwise(col("after"))
     val rowFields = envelope.schema("after").dataType
       .asInstanceOf[StructType].fieldNames
     val flat = rowFields.map(n => img.getField(n).as(n))
-    envelope.select(flat.toIndexedSeq ++ Seq(
+    kept.select(flat.toIndexedSeq ++ Seq(
       col("op"),
       col("source.table").as("table_name"),
       col("source.lsn").as("lsn")): _*)

@@ -10,9 +10,8 @@ import org.apache.spark.sql.graft.Bridge
 
 /** Bit-identity proof for the row-blocked ingest assignment
   * ([[BlockedAssign]]) against the plain expression kernel
-  * ([[VectorExprs.NearestCentroids]]) — the same standard as
-  * PrunedCentroidsSpec, for the kernel that actually carries the decade
-  * ingest wall. Blocking reorders WHICH (row, centroid) pairs are
+  * ([[VectorExprs.NearestCentroids]]), the kernel that carries the
+  * decade ingest wall. Blocking reorders WHICH (row, centroid) pairs are
   * computed when; each pair's distance is the same sequential fold, so
   * outputs must match bit for bit, adversarial shapes included.
   */

@@ -89,6 +89,29 @@ class CdcSpec extends SparkSpec {
     assert(df.filter(col("_corrupt").isNull).count() === 1)
   }
 
+  test("a truncated envelope line leaves no NULL-key row in latest state") {
+    import graft.operators.CdcEnvelope
+    val dir = Files.createTempDirectory("graft-cdc-malformed")
+    Seq("customers", "products", "orders", "order_items").foreach { t =>
+      Files.copy(java.nio.file.Paths.get(s"${CdcEnvelope.FixtureDir}/$t.jsonl"),
+        dir.resolve(s"$t.jsonl"))
+    }
+    Files.write(dir.resolve("customers.jsonl"),
+      "{\"before\":null,\"after\":{\"id\":99,\n".getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    // the corrupt line is still counted at decode…
+    val decoded = Cdc.readJsonEvents(spark,
+      CdcSchemas.envelope(CdcSchemas.customer), s"$dir/customers.jsonl")
+    assert(decoded.filter(col("_corrupt").isNotNull).count() === 1)
+    // …but never reaches state as a phantom key
+    def state(d: String) = Cdc.latestState(CdcEnvelope.unified(spark, d),
+      Seq("table_name", "id"), Seq(Cdc.lsnOrd($"lsn")))
+    val got = state(dir.toString)
+    assert(got.filter($"table_name".isNull || $"id".isNull ||
+      $"op".isNull || $"lsn".isNull).count() === 0)
+    assert(got.collect().toSet === state(CdcEnvelope.FixtureDir).collect().toSet)
+  }
+
   test("unknownFieldStats surfaces fields the declared schema would drop") {
     val raw = Seq(
       """{"id":1,"name":"a","op":"c","new_col":"x","lsn":"0/1"}""",

@@ -487,6 +487,35 @@ class StreamingSpec extends SparkSpec {
       .filter($"id" === 2).count() === 0)
   }
 
+  test("a truncated envelope line leaves no NULL-key row in upsert state") {
+    import graft.sources.CdcSchemas
+    val src = tmp("graft-malformed-src")
+    val state = tmp("graft-malformed-state") + "/t"
+    val chk = tmp("graft-malformed-chk")
+    val fixture = java.nio.file.Paths.get(
+      s"${graft.operators.CdcEnvelope.FixtureDir}/customers.jsonl")
+    val lines = new String(Files.readAllBytes(fixture), "UTF-8").trim +
+      "\n{\"before\":null,\"after\":{\"id\":99,\n"
+    Files.write(java.nio.file.Paths.get(src, "customers.jsonl"),
+      lines.getBytes("UTF-8"))
+    val stream = Cdc.softDeleteRewrite(Cdc.unwrap(
+      CdcStream.jsonEventStream(spark,
+        CdcSchemas.envelope(CdcSchemas.customer), src)))
+      .withColumn("lsn_ord", Cdc.lsnOrd($"lsn"))
+    val q = CdcStream.startUpsertSink(stream, Seq("table_name", "id"),
+      "lsn_ord", state, chk, trigger = Trigger.AvailableNow())
+    q.awaitTermination(120000)
+    val got = CdcStream.readUpsertState(spark, state)
+    assert(got.filter($"table_name".isNull || $"id".isNull ||
+      $"op".isNull || $"lsn".isNull).count() === 0)
+    val want = Cdc.latestState(Cdc.softDeleteRewrite(Cdc.unwrap(
+      Cdc.readJsonEvents(spark, CdcSchemas.envelope(CdcSchemas.customer),
+        fixture.toString))),
+      Seq("table_name", "id"), Seq(Cdc.lsnOrd($"lsn")))
+    assert(got.select($"id").as[Long].collect().sorted ===
+      want.select($"id").as[Long].collect().sorted)
+  }
+
   test("upsert state reader ignores torn (uncommitted) versions") {
     val state = tmp("graft-torn-state")
     Seq((1L, "a"), (2L, "b")).toDF("id", "name")

@@ -104,10 +104,11 @@ object Bench {
     // q20/minhash gate outliers could only be ADJUDICATED, not explained,
     // from wall times alone — capture per-query task GC / spill via a
     // listener plus driver GC and post-GC heap, so a full-bench number
-    // that diverges from its fresh-session MicroBench twin carries its
-    // own cause in the ledger. Listener counters are monotonic; per-query
-    // values are deltas. (local[...] = one JVM, so "task GC" and "driver
-    // GC" sample the same collector from two angles.)
+    // that diverges from its fresh-session twin (`bench/micro_*.json`)
+    // carries its own cause in the ledger. Listener counters are
+    // monotonic; per-query values are deltas. (local[...] = one JVM, so
+    // "task GC" and "driver GC" sample the same collector from two
+    // angles.)
     val taskGcMs = new java.util.concurrent.atomic.AtomicLong()
     val memSpill = new java.util.concurrent.atomic.AtomicLong()
     val diskSpill = new java.util.concurrent.atomic.AtomicLong()

@@ -34,15 +34,6 @@ object TextFeatures {
       sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
       i => text.substr(i, lit(n)))
 
-  /** Distinct word n-grams (token shingles) of whitespace-tokenized text. */
-  def tokenNgrams(text: Column, n: Int): Column = {
-    val toks = split(text, " ")
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-      i => concat_ws(" ",
-        (0 until n).map(j => element_at(toks, i + lit(j))): _*)))
-  }
-
   /** Exact Jaccard similarity of two (distinct-element) array columns,
     * |A∩B| / |A∪B|, as a double. Integer set sizes → the division is
     * bit-identical across engines.

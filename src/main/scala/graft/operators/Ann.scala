@@ -1353,8 +1353,8 @@ object Ann {
     * (re-point `spark.graft.ann.indexDir` / restart the serving session) and
     * then retires the old dir — the generation contract every external
     * vector index has. Cost is one index-sized shuffle, so schedule it
-    * when appended-file count (not time) says so; [[graft.tools
-    * .AppendProbe]] measures the append → compact lifecycle per decade.
+    * when appended-file count (not time) says so; the append → compact
+    * lifecycle per decade is measured in `bench/append_decade_r10.json`.
     */
   def compactIndex(s: SparkSession, idx: IvfIndex, dstDir: String)
       : IvfIndex = {

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
   * WHY: `spark.read.parquet(dir)` on a 10⁴-cell tree pays a driver-side
   * recursive listing + partition inference PER FRESH READ — measured
   * 15–17 s at the 2M-vector decade (`bench/emb_decade_r11.json`,
-  * ProbeWallBreakdown), feeding a 0.2 s probed scan. The session memo
+  * NOTES.md round 11), feeding a 0.2 s probed scan. The session memo
   * ([[SessionCache]]) amortizes that within a session, but every COLD
   * session re-pays it, and the walk grows with cell count — at 100 TB
   * geometry (10⁵–10⁶ cells on an object store) it is minutes of driver

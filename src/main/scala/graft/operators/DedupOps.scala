@@ -66,7 +66,7 @@ object DedupOps {
                           // costs recall at J≈0.8 and doubles the
                           // signature-aggregate codegen.
 
-  /** LSH band geometry as deployment confs (defaults above). Rows per
+  /** LSH rows per band as a deployment conf (default above). Rows per
     * band is CORPUS-SIZE-dependent: background noise candidates are
     * ~C(n,2)·b·J_bg^r — QUADRATIC in n at fixed geometry — so r must
     * grow ~log n to hold the candidate budget while b·(threshold)^r
@@ -80,8 +80,6 @@ object DedupOps {
     * explicit `spark.graft.lsh.rows` always wins. The signature kernel
     * width follows bands·rows, so widening rows needs no code change.
     */
-  private def bandsOf(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.lsh.bands").map(_.toInt).getOrElse(Bands)
   private val RowsBaseDocs = 5000.0
   private[graft] def rowsOf(s: SparkSession, d: String): Int =
     s.conf.getOption("spark.graft.lsh.rows").map(_.toInt).getOrElse {
@@ -149,9 +147,11 @@ object DedupOps {
     * sets, same `round(J,4) ≥ 0.8` criterion as the LSH query's
     * verification stage, so set-inclusion against it is meaningful.
     * Eagerly checkpointed (pairs-above-threshold — tiny) so the persist
-    * on the doc-set scan can be released immediately.
+    * on the doc-set scan can be released immediately. Per-stage walls
+    * (doc sets, prefix postings, candidates, verify) are banked in
+    * `bench/lsh_truth_probe_r16_*.json`.
     */
-  private[graft] def shingleTruthPairs(s: SparkSession, d: String)
+  private def shingleTruthPairs(s: SparkSession, d: String)
       : DataFrame = {
     val docs = shingleDocSets(s, d).persist()
     // the doc-set side is the gate's budget (≤ ~LshGateTargetDocs docs)
@@ -168,7 +168,7 @@ object DedupOps {
     * dir — exposed for the gate's floor computation and its report tool.
     */
   private[graft] def bandGeometry(s: SparkSession, d: String): (Int, Int) =
-    (bandsOf(s), rowsOf(s, d))
+    (Bands, rowsOf(s, d))
 
   /** Truth-table budget for `dedup_minhash_lsh_gate` — the
     * [[exactTwinModulus]] convention applied to the one remaining
@@ -654,15 +654,7 @@ object DedupOps {
     */
   def prefixCandidates(posts: DataFrame,
       t: Double): DataFrame =
-    candidatesFromPrefix(prefixPosts(posts, t), t)
-
-  /** The per-gram pair generation over an already-built prefix-posting
-    * frame — split out of [[prefixCandidates]] so the truth-build probe
-    * ([[graft.tools.LshTruthProbe]]) can time the stages separately.
-    */
-  private[graft] def candidatesFromPrefix(prefix: DataFrame, t: Double)
-      : DataFrame = {
-    prefix
+    prefixPosts(posts, t)
       .groupBy(col("g"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("sz")))).as("ds"))
       .filter(size(col("ds")) > 1)
@@ -674,13 +666,7 @@ object DedupOps {
       .filter(least(col("sza"), col("szb")) >=
         lit(t) * greatest(col("sza"), col("szb")))
       .distinct()
-  }
 
-  // measurement-only probe surface for graft.tools.LshTruthProbe
-  private[graft] def probeShingleDocSets(s: SparkSession, d: String)
-      : DataFrame = shingleDocSets(s, d)
-  private[graft] def probePrefixCandidatesFrom(prefix: DataFrame)
-      : DataFrame = candidatesFromPrefix(prefix, 0.8)
   private[graft] def probeVerify(cand: DataFrame, docSets: DataFrame,
       thr: Double): DataFrame =
     verifyJaccard(cand, docSets, thr, broadcastDocs = true)
@@ -952,7 +938,7 @@ object DedupOps {
       // and both sides of the verification join; materializing once stops
       // the scan+kernel subtree from re-running per branch.
       val docs = shingleDocSets(s, d).localCheckpoint(false)
-      val (nb, nr) = (bandsOf(s), rowsOf(s, d))
+      val (nb, nr) = (Bands, rowsOf(s, d))
       // the ENTIRE signature is a row-local projection (fused K-min
       // kernel + size of the distinct array): the old groupBy over the
       // exploded postings — the pipeline's biggest shuffle plus a

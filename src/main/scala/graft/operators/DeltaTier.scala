@@ -12,7 +12,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * per touched cell. At the 2M-vector/10⁴-cell rehearsal decade that is
   * ~10⁴ files per 125k-row epoch — measured 20.6 s of a 24–29 s epoch
   * wall for the DATA write and 28–31 s for the codes write before its
-  * round-13 fix, none of it bytes (`graft.tools.AppendEpochProbe`). So
+  * round-13 fix, none of it bytes (NOTES.md, round 13). So
   * appended epochs land instead as ONE cell-SORTED file under
   * `<artifactDir>/_delta/e-<uuid>/`: the at-rest base stays
   * cell-partitioned (built/folded by build/compact, where the

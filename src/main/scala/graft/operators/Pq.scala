@@ -1021,28 +1021,6 @@ object Pq {
     }
   }
 
-  /** Measurement face of the ADC shortlist stage alone — the pruned
-    * codes scan + top-width collect, no re-rank ([[graft.tools
-    * .KneeBreakdown]]'s probe; serving always composes it with the
-    * exact re-rank).
-    */
-  private[graft] def adcShortlistProbe(s: SparkSession, idx: Ann.IvfIndex,
-      codesDir: String, books: Array[Array[Array[Double]]],
-      qRaw: Array[Double], nprobe: Int): Long = {
-    val nrm = math.sqrt(qRaw.map(x => x * x).sum)
-    val qUnit = if (nrm == 0.0) qRaw else qRaw.map(_ / nrm)
-    val lut = adcLut(qUnit, books)
-    val probed = idx.probeCells(qRaw.toSeq, nprobe)
-    codesRead(s, codesDir)
-      .filter(col("cell").isin(probed: _*))
-      .select(col("vec_id"), col("cell"),
-        graft.functions.PqExprs.pqAdcDot(col("codes"),
-          typedlit(lut.toSeq)).as("adc"))
-      .orderBy(col("adc").desc, col("vec_id"))
-      .limit(shortlistWidth(s, Some(books.length)))
-      .collect().length.toLong
-  }
-
   /** Plan choice for the composed serve — fuse shortlist+re-rank into
     * one job iff the probed cell set is no wider than the shortlist
     * (pruning below it is then impossible and the driver round-trip is

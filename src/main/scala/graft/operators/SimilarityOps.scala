@@ -80,18 +80,11 @@ object SimilarityOps {
   def quantizeInt8(v: Column): Column =
     graft.functions.VectorExprs.int8Quantize(v)
 
-  /** The per-vector scale for [[quantizeInt8]]/[[dequantizeInt8]] —
+  /** The per-vector scale for [[quantizeInt8]] —
     * compute once per row with `withColumn` and store beside the codes.
     */
   def int8Scale(v: Column): Column =
     greatest(array_max(transform(v, x => abs(x))), lit(1e-12)) / 127.0
-
-  /** Inverse of [[quantizeInt8]] given the stored scale — for
-    * magnitude-sensitive consumers (L2, dot); cosine needs no
-    * dequantization.
-    */
-  def dequantizeInt8(q: Column, scale: Column): Column =
-    transform(q, x => x.cast("double") * scale)
 
   val queries: Map[String, Q] = Map(
     // Cosine top-20 on int8-QUANTIZED embeddings (per-vector scales

@@ -176,10 +176,10 @@ object TextOps {
     s.conf.getOption("spark.graft.text.lmTopK")
       .map(_.toInt).getOrElse(0)
 
-  /** The bigram stream + model tables, shared by [[lmPerplexity]] and
-    * the LmScale measurement tool: `bi` is the (doc_id, pos, w1, w2)
-    * scoring stream (OOV-mapped when pruning), `c2`/`c1` the model,
-    * `vocab` the 1-row effective-V aggregate.
+  /** The bigram stream + model tables behind [[lmPerplexity]] (sf1/sf10
+    * model sizes per minCount in NOTES.md, round 8): `bi` is the
+    * (doc_id, pos, w1, w2) scoring stream (OOV-mapped when pruning),
+    * `c2`/`c1` the model, `vocab` the 1-row effective-V aggregate.
     */
   private[graft] final case class LmModel(
       bi: DataFrame, c2: DataFrame, c1: DataFrame, vocab: DataFrame)
@@ -276,13 +276,13 @@ object TextOps {
     * knobs, both collapsing pruned tokens into one OOV bucket BEFORE
     * bigram extraction with V = |kept| + 1 iff anything was pruned:
     *  - `spark.graft.text.lmMinCount` — CCNet-style frequency floor;
-    *    right when the corpus has a genuine rare tail (measured on the
-    *    ZipfCorpus fixture: floor 5 keeps 20% of the vocabulary / 50%
-    *    of the bigram keys). A floor alone does NOT guarantee sub-vocab
-    *    growth — a tail whose counts keep crossing the floor as the
-    *    corpus grows (or ScaleUp's adversarial shape, where every
-    *    minted token has head-sized counts and NOTHING prunes) grows
-    *    the kept set with the vocabulary.
+    *    right when the corpus has a genuine rare tail (measured on a
+    *    Zipf-tail fixture, NOTES.md round 8: floor 5 keeps 20% of the
+    *    vocabulary / 50% of the bigram keys). A floor alone does NOT
+    *    guarantee sub-vocab growth — a tail whose counts keep crossing
+    *    the floor as the corpus grows (or ScaleUp's adversarial shape,
+    *    where every minted token has head-sized counts and NOTHING
+    *    prunes) grows the kept set with the vocabulary.
     *  - `spark.graft.text.lmTopK` ([[lmTopKOf]]) — the HARD bound:
     *    keep the K most frequent tokens, so c1 ≤ K+1 and c2 is capped
     *    by the observed bigrams over a (K+1)-token alphabet at ANY

@@ -1,8 +1,9 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 
 /** Whole-registry physical-plan audit — the scale-story evidence in one
@@ -26,6 +27,54 @@ import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExcha
   * markdown table, one row per query, sorted by name.
   */
 object PlanAudit {
+  /** One audited plan: the table's columns for one query. */
+  final case class Shape(xchg: Int, bhj: Int, smj: Int, wsc: Int,
+      sort: Int, pushed: Boolean)
+
+  /** Counts one executed plan's operators. Identity-keyed visited set
+    * (not identityHashCode ints, which can collide and undercount; not
+    * equals, which would merge distinct-but-equal operators): a subtree
+    * reachable both through a query-stage wrapper and a
+    * reused-exchange/subquery path is counted exactly once. `pushed`
+    * counts parquet scans only: a text or JSON scan's inferred
+    * `IsNotNull(value)` skips nothing.
+    */
+  def audit(plan: SparkPlan): Shape = {
+    val visited = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
+    var shuffles = 0
+    var bhj, smj, wsc, sort = 0
+    var pushed = false
+    def walk(x: SparkPlan): Unit = {
+      if (!visited.add(x)) return
+      x.nodeName match {
+        case n if n.contains("BroadcastHashJoin") => bhj += 1
+        case n if n.contains("SortMergeJoin") => smj += 1
+        case n if n.contains("WholeStageCodegen") => wsc += 1
+        case "Sort" => sort += 1
+        case _ =>
+      }
+      x match {
+        case _: ShuffleExchangeLike => shuffles += 1
+        case f: FileSourceScanExec
+            if f.relation.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          if (f.metadata.get("PushedFilters").exists(v =>
+              v.nonEmpty && v != "[]")) pushed = true
+        case _: ReusedExchangeExec => ()
+        case _ =>
+      }
+      x match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec => walk(q.plan)
+        case _ =>
+      }
+      x.children.foreach(walk)
+      x.subqueries.foreach(walk)
+    }
+    walk(plan)
+    Shape(shuffles, bhj, smj, wsc, sort, pushed)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanAudit <sfDir> [query ...]")
     val sfDir = args(0)
@@ -48,45 +97,10 @@ object PlanAudit {
         try {
           val df = fn(spark, sfDir)
           df.collect() // drive AQE to its final plan
-          val plan = df.queryExecution.executedPlan
-          // identity-keyed visited set (not identityHashCode ints, which
-          // can collide and undercount; not equals, which would merge
-          // distinct-but-equal operators): a subtree reachable both
-          // through a query-stage wrapper and a reused-exchange/subquery
-          // path is counted exactly once
-          val visited = java.util.Collections.newSetFromMap(
-            new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean]())
-          var shuffles = 0
-          var bhj, smj, wsc, sort = 0
-          var pushed = false
-          def walk(x: SparkPlan): Unit = {
-            if (!visited.add(x)) return
-            x.nodeName match {
-              case n if n.contains("BroadcastHashJoin") => bhj += 1
-              case n if n.contains("SortMergeJoin") => smj += 1
-              case n if n.contains("WholeStageCodegen") => wsc += 1
-              case "Sort" => sort += 1
-              case _ =>
-            }
-            x match {
-              case _: ShuffleExchangeLike => shuffles += 1
-              case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-                if (f.metadata.get("PushedFilters").exists(v =>
-                    v.nonEmpty && v != "[]")) pushed = true
-              case _: ReusedExchangeExec => ()
-              case _ =>
-            }
-            x match {
-              case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-              case q: QueryStageExec => walk(q.plan)
-              case _ =>
-            }
-            x.children.foreach(walk)
-            x.subqueries.foreach(walk)
-          }
-          walk(plan)
-          val p = if (pushed) "yes" else ""
-          println(s"| $name | $shuffles | $bhj | $smj | $wsc | $sort | $p |")
+          val a = audit(df.queryExecution.executedPlan)
+          val p = if (a.pushed) "yes" else ""
+          println(s"| $name | ${a.xchg} | ${a.bhj} | ${a.smj} | ${a.wsc} " +
+            s"| ${a.sort} | $p |")
         } catch {
           case e: Throwable =>
             println(s"| $name | ERROR: ${e.getClass.getSimpleName} | | | | | |")

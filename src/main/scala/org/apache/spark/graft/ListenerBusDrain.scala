@@ -4,7 +4,8 @@ import org.apache.spark.SparkContext
 
 /** The repo's one Spark-package accessor: deterministic drain of the
   * async listener bus, so a measurement tool reading task-metric
-  * counters (e.g. [[graft.tools.LayoutProbe]]'s bytes-read listener)
+  * counters (e.g. the bytes-read listener behind
+  * `bench/layout_probe_r9_sf1.json`)
   * observes every task-end event of the job it just ran instead of
   * racing a fixed settle sleep on a loaded box. `SparkContext
   * .listenerBus` is `private[spark]` — this forwarder is the documented
